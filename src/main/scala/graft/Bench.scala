@@ -182,6 +182,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // a file left by an earlier run must never read as this run's results
+    val queriesFile = java.nio.file.Paths.get("BENCH_LAST_RUN.json")
+    java.nio.file.Files.deleteIfExists(queriesFile)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -252,13 +255,16 @@ object Bench {
     //     capture window, so a bounded tail always ends with one complete,
     //     parseable JSON line carrying the total and the error list.
     // The full one-line contract above is unchanged and printed first.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LAST_RUN.json"), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_LAST_RUN.json write failed: ${e.getMessage}")
-    }
+    val queriesFileJson =
+      try {
+        java.nio.file.Files.writeString(queriesFile, line + "\n")
+        s""""$queriesFile""""
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $queriesFile write failed: ${e.getMessage}")
+        "null"
+      }
     val nQ = results.size
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nQ,"errors":$errJson,"sf":"$sfDir","queries_file":"BENCH_LAST_RUN.json"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nQ,"errors":$errJson,"sf":"$sfDir","queries_file":$queriesFileJson}""")
     spark.stop()
   }
 }

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column, Row}
+import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+
+import graft.functions.ArrayKernels
 
 /** Common average referencing — the engine's flagship cross-channel
   * aggregate, in pure Spark SQL (no UDF, fully codegen-able).
@@ -190,12 +192,10 @@ object CommonReferencing {
 
   /** Split segments into blockSize-sample blocks (narrow). */
   private def blocked(segments: DataFrame, blockSize: Int): DataFrame = {
-    val toBlocks = udf { (values: Array[Double]) =>
-      values.grouped(blockSize).toArray
-    }
+    val toBlocks = ArrayKernels.split("car_blocks", col("values"))(_.grouped(blockSize).toArray)
     segments.select(
       col("series"), col("channel"), col("band"), col("rate"), col("startingTime"),
-      posexplode(toBlocks(col("values"))).as(Seq("block_idx", "block")))
+      posexplode(toBlocks).as(Seq("block_idx", "block")))
   }
 
   /** Reassemble per-key segments from blocks in block order — native
@@ -227,8 +227,7 @@ object CommonReferencing {
     val single = isSingle(precision)
 
     // one row per (series, block_idx): all channels' blocks
-    val subtractUdf = udf { (chBlocks: Seq[Row]) =>
-      val byCh = chBlocks.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toArray
+    val subtract = ArrayKernels.keyedMap("car_subtract", col("chBlocks")) { byCh =>
       val car = carOfBlock(byCh, nExclude, single)
       byCh.map { case (ch, b) =>
         val out = new Array[Double](car.length)
@@ -244,9 +243,9 @@ object CommonReferencing {
       .groupBy("series", "band", "rate", "startingTime", "block_idx")
       .agg(collect_list(struct(col("channel"), col("block"))).as("chBlocks"))
       .select(col("series"), col("band"), col("rate"), col("startingTime"), col("block_idx"),
-        explode(subtractUdf(col("chBlocks"))).as("cb"))
-      .select(col("series"), col("cb._1").as("channel"), col("band"),
-        col("rate"), col("startingTime"), col("block_idx"), col("cb._2").as("block"))
+        explode(subtract).as("cb"))
+      .select(col("series"), col("cb.key").as("channel"), col("band"),
+        col("rate"), col("startingTime"), col("block_idx"), col("cb.values").as("block"))
 
     reassemble(referenced, Seq("series", "channel", "band", "rate", "startingTime"))
   }
@@ -264,15 +263,14 @@ object CommonReferencing {
                   precision: String = "double"): DataFrame = {
     val nExclude = nExcludeFor(nChannels, meanFrac, roundFunc)
     val single = isSingle(precision)
-    val carUdf = udf { (chBlocks: Seq[Row]) =>
-      carOfBlock(chBlocks.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toArray,
-        nExclude, single)
+    val carTrace = ArrayKernels.keyedReduce("car_trace", col("chBlocks")) {
+      carOfBlock(_, nExclude, single)
     }
     val carBlocks = blocked(segments, blockSize)
       .groupBy("series", "band", "rate", "startingTime", "block_idx")
       .agg(collect_list(struct(col("channel"), col("block"))).as("chBlocks"))
       .select(col("series"), col("band"), col("rate"), col("startingTime"),
-        col("block_idx"), carUdf(col("chBlocks")).as("block"))
+        col("block_idx"), carTrace.as("block"))
     reassemble(carBlocks, Seq("series", "band", "rate", "startingTime"))
       .select(col("series"), lit(null).cast("int").as("channel"), col("band"),
         col("rate"), col("startingTime"), col("values"))

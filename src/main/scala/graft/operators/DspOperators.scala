@@ -5,14 +5,17 @@ import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentHashMap
 
 import graft.dsp.{Signal, Signal32, Kernels}
+import graft.functions.ArrayKernels
 import graft.dsp.Signal.{PadSpec, FastPad}
 
 /** The per-segment spectral operators: each is a narrow `DataFrame =>
   * DataFrame` map over SegmentFrame rows (no shuffle), with the FFT math in
-  * graft.dsp. These are the only Scala UDFs in the engine's hot path — Spark
-  * has no FFT primitive (SURVEY.md §7 "built-in vs custom"); everything
-  * around them (amplitude, phase, joins, aggregations) stays in Catalyst
-  * expressions so codegen and pushdown keep working.
+  * graft.dsp. Spark has no FFT primitive (SURVEY.md §7 "built-in vs
+  * custom"), so each kernel runs as a primitive-array Catalyst expression
+  * (graft.functions.ArrayKernels) that carries the kernel closure and hands
+  * it a `double[]`; everything around them (amplitude, phase, joins,
+  * aggregations) stays in built-in or native expressions so codegen and
+  * pushdown keep working.
   */
 object DspOperators {
 
@@ -37,7 +40,7 @@ object DspOperators {
   }
 
   /** Resample every segment to `newFreq` (per-row rate-aware). `preScale`
-    * folds a unit conversion (e.g. V -> µV ×1e6) into the same UDF pass so
+    * folds a unit conversion (e.g. V -> µV ×1e6) into the same kernel pass so
     * the pipeline needs no separate interpreted `transform` HOF.
     * `precision="single"` computes in float32 end to end (the reference's
     * default mode, utils.py:9-31) — values in the returned array<double>
@@ -47,20 +50,21 @@ object DspOperators {
   def resample(segments: DataFrame, newFreq: Double, npad: PadSpec = FastPad,
                preScale: Double = 1.0, precision: String = "double"): DataFrame = {
     requirePrecision(precision)
-    val f =
-      if (precision == "single") udf { (values: Array[Double], rate: Double) =>
-        toF64(Signal32.resample(toF32(values, preScale), newFreq, rate, npad))
-      }
-      else udf { (values: Array[Double], rate: Double) =>
-        val in = if (preScale == 1.0) values else values.map(_ * preScale)
-        Signal.resample(in, newFreq, rate, npad)
-      }
+    val single = precision == "single"
+    val resampled = ArrayKernels.mapWithRate("resample", col("values"), col("rate")) {
+      (values, rate) =>
+        if (single) toF64(Signal32.resample(toF32(values, preScale), newFreq, rate, npad))
+        else {
+          val in = if (preScale == 1.0) values else values.map(_ * preScale)
+          Signal.resample(in, newFreq, rate, npad)
+        }
+    }
     // resampling changes the sample count, so a per-sample timestamp column
     // from streaming crossfade windows no longer aligns — drop it so a
     // downstream stitchTimeWindows fails fast on the missing column instead
     // of silently mis-weighting (length-preserving ops keep it)
     segments.drop("sample_ts")
-      .withColumn("values", f(col("values"), col("rate")))
+      .withColumn("values", resampled)
       .withColumn("rate", lit(newFreq))
   }
 
@@ -74,19 +78,13 @@ object DspOperators {
                           continuousProfile: Boolean = false,
                           precision: String = "double"): DataFrame = {
     requirePrecision(precision)
-    val f =
-      if (precision == "single") udf { (values: Array[Double], rate: Double) =>
-        toF64(Signal32.notch(toF32(values, 1.0), rate, noiseHz, npad, continuousProfile))
-      }
-      else udf { (values: Array[Double], rate: Double) =>
-        Signal.notch(values, rate, noiseHz, npad, continuousProfile)
-      }
-    segments.withColumn("values", f(col("values"), col("rate")))
+    val single = precision == "single"
+    segments.withColumn("values",
+      ArrayKernels.mapWithRate("notch", col("values"), col("rate")) { (values, rate) =>
+        if (single) toF64(Signal32.notch(toF32(values, 1.0), rate, noiseHz, npad, continuousProfile))
+        else Signal.notch(values, rate, noiseHz, npad, continuousProfile)
+      })
   }
-
-  /** One wavelet output band: complex trace as parallel re/im arrays so
-    * amplitude/phase stay pure-SQL (`zip_with` + `hypot`/`atan2`). */
-  final case class BandTrace(band: Int, re: Array[Double], im: Array[Double])
 
   // Executor-local filterbank cache: kernels depend on the PADDED length and
   // rate; computing all bands for a channel inside one task is the
@@ -98,20 +96,21 @@ object DspOperators {
     fbCache.computeIfAbsent((filters, paddedLen, rate, hgOnly),
       _ => Kernels.filterbank(filters, paddedLen, rate, hgOnly))
 
-  private def packBands(bands: Array[Array[Double]], scale: Double = 1.0): Seq[BandTrace] =
-    bands.indices.map { b =>
-      val z = bands(b)
+  /** Each wavelet output band as its complex trace in parallel (re, im)
+    * arrays, so amplitude/phase stay native expressions (ComplexAmplitude /
+    * ComplexPhase); element b is band b. */
+  private def packBands(bands: Array[Array[Double]], scale: Double): Array[(Array[Double], Array[Double])] =
+    bands.map { z =>
       val n = z.length / 2
       val re = new Array[Double](n)
       val im = new Array[Double](n)
       var i = 0
       while (i < n) { re(i) = z(2 * i) * scale; im(i) = z(2 * i + 1) * scale; i += 1 }
-      BandTrace(b, re, im)
+      (re, im)
     }
 
-  private def packBands32(bands: Array[Array[Float]], scale: Double): Seq[BandTrace] =
-    bands.indices.map { b =>
-      val z = bands(b)
+  private def packBands32(bands: Array[Array[Float]], scale: Double): Array[(Array[Double], Array[Double])] =
+    bands.map { z =>
       val n = z.length / 2
       val re = new Array[Double](n)
       val im = new Array[Double](n)
@@ -121,17 +120,20 @@ object DspOperators {
         im(i) = (z(2 * i + 1) * scale).toFloat.toDouble
         i += 1
       }
-      BandTrace(b, re, im)
+      (re, im)
     }
 
+  /** One row per band of the wavelet `kernel`'s output. */
   private def explodeBands(segments: DataFrame,
-                           f: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame = {
+                           kernel: (Array[Double], Double) => Array[(Array[Double], Array[Double])])
+      : DataFrame = {
     // streaming crossfade windows carry per-sample timestamps; the wavelet
     // preserves sample count, so the column stays aligned and rides through
     // for StreamingOps.stitchTimeWindows
     val extras = segments.columns.filter(_ == "sample_ts").map(col).toSeq
     segments
-      .withColumn("bt", explode(f(col("values"), col("rate"))))
+      .withColumn("bt", explode(
+        ArrayKernels.bandsWithRate("wavelet", col("values"), col("rate"))(kernel)))
       .select(Seq(col("series"), col("channel"), col("bt.band").as("band"),
         col("rate"), col("startingTime"), col("bt.re").as("re"), col("bt.im").as("im"))
         ++ extras: _*)
@@ -156,22 +158,15 @@ object DspOperators {
                        fftNormLength: Option[Int] = None,
                        precision: String = "double"): DataFrame = {
     requirePrecision(precision)
-    val f =
-      if (precision == "single") udf { (values: Array[Double], rate: Double) =>
-        val plan = Signal.padPlan(values.length, npad)
-        val padded = values.length + plan.padTotal
-        val fb = cachedFilterbank(filters, padded, rate, hgOnly)
-        val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
-        packBands32(Signal32.waveletBands(toF32(values, 1.0), fb.kernels, npad), scale)
-      }
-      else udf { (values: Array[Double], rate: Double) =>
-        val plan = Signal.padPlan(values.length, npad)
-        val padded = values.length + plan.padTotal
-        val fb = cachedFilterbank(filters, padded, rate, hgOnly)
-        val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
-        packBands(Signal.waveletBands(values, fb.kernels, npad), scale)
-      }
-    explodeBands(segments, f)
+    val single = precision == "single"
+    explodeBands(segments, { (values, rate) =>
+      val plan = Signal.padPlan(values.length, npad)
+      val padded = values.length + plan.padTotal
+      val fb = cachedFilterbank(filters, padded, rate, hgOnly)
+      val scale = fftNormLength.fold(1.0)(ref => math.sqrt(padded.toDouble / ref))
+      if (single) packBands32(Signal32.waveletBands(toF32(values, 1.0), fb.kernels, npad), scale)
+      else packBands(Signal.waveletBands(values, fb.kernels, npad), scale)
+    })
   }
 
   /** Wavelet transform against a USER-SUPPLIED kernel list — the reference's
@@ -208,20 +203,14 @@ object DspOperators {
       case Some(build) => Kernels.l2Normalize(build(n, rate))
       case None        => null
     }.toArray
-    val f =
-      if (precision == "single") udf { (values: Array[Double], rate: Double) =>
-        val plan = Signal.padPlan(values.length, npad)
-        val n = values.length + plan.padTotal
-        val scale = fftNormLength.fold(1.0)(ref => math.sqrt(n.toDouble / ref))
-        packBands32(Signal32.waveletBands(toF32(values, 1.0), built(n, rate), npad), scale)
-      }
-      else udf { (values: Array[Double], rate: Double) =>
-        val plan = Signal.padPlan(values.length, npad)
-        val n = values.length + plan.padTotal
-        val scale = fftNormLength.fold(1.0)(ref => math.sqrt(n.toDouble / ref))
-        packBands(Signal.waveletBands(values, built(n, rate), npad), scale)
-      }
-    explodeBands(segments, f)
+    val single = precision == "single"
+    explodeBands(segments, { (values, rate) =>
+      val plan = Signal.padPlan(values.length, npad)
+      val n = values.length + plan.padTotal
+      val scale = fftNormLength.fold(1.0)(ref => math.sqrt(n.toDouble / ref))
+      if (single) packBands32(Signal32.waveletBands(toF32(values, 1.0), built(n, rate), npad), scale)
+      else packBands(Signal.waveletBands(values, built(n, rate), npad), scale)
+    })
   }
 
   /** Amplitude of a complex (re, im) wavelet frame — native Catalyst
@@ -256,7 +245,7 @@ object DspOperators {
     * Population std, like np.std in the tutorial
     * (examples/plot_ECoG_preprocessing_tutorial.py:164-166).
     *
-    * A one-pass UDF rather than `transform`/`aggregate` higher-order
+    * A one-pass array kernel rather than `transform`/`aggregate` higher-order
     * expressions: HOFs are interpreted (no codegen) and Catalyst's project
     * collapse inlines the baseline aggregate into every downstream element
     * evaluation — measured 100x slower than this loop when followed by a
@@ -277,37 +266,35 @@ object DspOperators {
                      precision: String, baselineOffset: Int): DataFrame = {
     requirePrecision(precision)
     require(baselineOffset >= 0, s"negative baselineOffset: $baselineOffset")
-    val f =
-      if (graft.operators.CommonReferencing.isSingle(precision))
+    val single = CommonReferencing.isSingle(precision)
+    segments.withColumn("values", ArrayKernels.map("zscore", col("values")) { values =>
+      if (single) {
         // float32 compute (reference precision='single', utils.py:9-31):
         // two-pass mean/std like np.mean/np.std over a float32 array —
         // the one-pass s2/n - mu^2 form cancels catastrophically in f32
-        udf { (values: Array[Double]) =>
-          val o = math.min(baselineOffset, math.max(values.length - 1, 0))
-          val n = math.min(o + baselineSamples, values.length)
-          var s = 0.0f
-          var i = o
-          while (i < n) { s += values(i).toFloat; i += 1 }
-          val mu = s / (n - o)
-          var s2 = 0.0f
-          i = o
-          while (i < n) { val d = values(i).toFloat - mu; s2 += d * d; i += 1 }
-          val sd = math.sqrt((s2 / (n - o)).toDouble).toFloat
-          values.map(v => ((v.toFloat - mu) / sd).toDouble)
-        }
-      else
-        udf { (values: Array[Double]) =>
-          val o = math.min(baselineOffset, math.max(values.length - 1, 0))
-          val n = math.min(o + baselineSamples, values.length)
-          var s = 0.0
-          var s2 = 0.0
-          var i = o
-          while (i < n) { s += values(i); s2 += values(i) * values(i); i += 1 }
-          val mu = s / (n - o)
-          val sd = math.sqrt(s2 / (n - o) - mu * mu)
-          values.map(v => (v - mu) / sd)
-        }
-    segments.withColumn("values", f(col("values")))
+        val o = math.min(baselineOffset, math.max(values.length - 1, 0))
+        val n = math.min(o + baselineSamples, values.length)
+        var s = 0.0f
+        var i = o
+        while (i < n) { s += values(i).toFloat; i += 1 }
+        val mu = s / (n - o)
+        var s2 = 0.0f
+        i = o
+        while (i < n) { val d = values(i).toFloat - mu; s2 += d * d; i += 1 }
+        val sd = math.sqrt((s2 / (n - o)).toDouble).toFloat
+        values.map(v => ((v.toFloat - mu) / sd).toDouble)
+      } else {
+        val o = math.min(baselineOffset, math.max(values.length - 1, 0))
+        val n = math.min(o + baselineSamples, values.length)
+        var s = 0.0
+        var s2 = 0.0
+        var i = o
+        while (i < n) { s += values(i); s2 += values(i) * values(i); i += 1 }
+        val mu = s / (n - o)
+        val sd = math.sqrt(s2 / (n - o) - mu * mu)
+        values.map(v => (v - mu) / sd)
+      }
+    })
   }
 
   /** Welch averaged-periodogram power-spectral-density estimate (Welch
@@ -324,7 +311,7 @@ object DspOperators {
     * FFT operator here. */
   def welchPsd(segments: DataFrame, nperseg: Int, hop: Int): DataFrame = {
     require(nperseg >= 2 && hop >= 1, s"need nperseg>=2, hop>=1; got $nperseg/$hop")
-    val f = udf { (values: Array[Double], rate: Double) =>
+    val psd = ArrayKernels.mapWithRate("welch_psd", col("values"), col("rate")) { (values, rate) =>
       val L = nperseg
       if (values.length < L) Array.empty[Double]
       else {
@@ -360,7 +347,7 @@ object DspOperators {
       }
     }
     segments
-      .withColumn("_psd", f(col("values"), col("rate")))
+      .withColumn("_psd", psd)
       .select(col("series"), col("channel"), col("band"), col("rate"),
         posexplode(col("_psd")).as(Seq("k", "psd")))
       .withColumn("freq", col("k") * col("rate") / lit(nperseg.toDouble))

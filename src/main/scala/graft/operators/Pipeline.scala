@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dsp.Signal.{PadSpec, FastPad}
+import graft.functions.ArrayKernels
 import graft.model.Frames
 
 /** The end-to-end preprocessing pipeline — the engine's equivalent of
@@ -39,7 +40,7 @@ object Pipeline {
     * wavelet-amplitude SegmentFrame (one row per channel × band). */
   def preprocessBlock(raw: DataFrame, nChannels: Int,
                       config: Config = Config()): DataFrame = {
-    // unit scaling (V -> µV) rides inside the resample UDF's array pass —
+    // unit scaling (V -> µV) rides inside the resample kernel's array pass —
     // a separate `transform` HOF would run interpreted (NOTES.md sharp edge)
     val downsampled =
       DspOperators.resample(raw, config.initialRate, config.npad,
@@ -71,8 +72,8 @@ object Pipeline {
                      precision: String = "double"): DataFrame = {
     val z = DspOperators.zscoreSegments(waveletAmp, baselineSamples, precision)
     val single = precision == "single"
-    val avgBands = udf { (rows: Seq[org.apache.spark.sql.Row]) =>
-      val byBand = rows.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    val avgBands = ArrayKernels.keyedReduce("band_mean", col("bv")) { rows =>
+      val byBand = rows.sortBy(_._1)
       val n = byBand.map(_._2.length).min
       if (single) {
         // float32 accumulate + divide, matching the np.mean-over-float32
@@ -106,7 +107,7 @@ object Pipeline {
     z.groupBy("series", "channel", "rate", "startingTime")
       .agg(collect_list(struct(col("band"), col("values"))).as("bv"))
       .select(col("series"), col("channel"), lit(null).cast("int").as("band"),
-        col("rate"), col("startingTime"), avgBands(col("bv")).as("values"))
+        col("rate"), col("startingTime"), avgBands.as("values"))
   }
 }
 

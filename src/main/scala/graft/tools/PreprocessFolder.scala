@@ -51,7 +51,7 @@ object PreprocessFolder {
     // the spectral ops (utils.py:9-31), not just the storage cast
     val down = DspOperators.resample(raw, a.initialRate, precision = a.precision)
     val notched = DspOperators.applyLinenoiseNotch(down, precision = a.precision)
-    val referenced = CommonReferencing.subtractCarSegments(notched, nCh)
+    val referenced = CommonReferencing.subtractCarSegments(notched, nCh, precision = a.precision)
     val amp = DspOperators.amplitude(
       DspOperators.waveletTransform(referenced, a.filters, hgOnly = true,
         precision = a.precision))
@@ -74,7 +74,7 @@ object PreprocessFolder {
         // AND the CAR average itself (pipelines.py:148-170)
         store.writeProcessing(s"CAR_ln_downsampled_${a.acqName}", cast(referenced))
         store.writeProcessing(s"CAR_of_downsampled_${a.acqName}",
-          cast(CommonReferencing.carSegments(cached, nCh)))
+          cast(CommonReferencing.carSegments(cached, nCh, precision = a.precision)))
         writeWavelet()
       } finally cached.unpersist()
     } else writeWavelet()

@@ -4,6 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Native expression correctness (eval == codegen == built-in composition)
   * and physical-plan discipline: pruned scans, broadcast dims, codegen'd
@@ -45,6 +49,15 @@ class ExpressionsAndPlansSpec extends AnyFunSuite {
     val err = intercept[Exception](
       spark.sql("SELECT complex_amplitude(1, 2)").collect())
     assert(err.getMessage.toLowerCase.contains("array"))
+    // results are primitive-backed arrays on both evaluation paths, not
+    // GenericArrayData boxing every element
+    val re = Literal.create(Array(3.0, 1.0), ArrayType(DoubleType, containsNull = false))
+    val im = Literal.create(Array(4.0, 1.0), ArrayType(DoubleType, containsNull = false))
+    for (e <- Seq(ComplexAmplitude(re, im), ComplexPhase(re, im))) {
+      assert(e.eval().isInstanceOf[UnsafeArrayData])
+      val generated = GenerateMutableProjection.generate(Seq(e)).apply(InternalRow.empty)
+      assert(generated.getArray(0).isInstanceOf[UnsafeArrayData])
+    }
   }
 
   private def physical(df: org.apache.spark.sql.DataFrame): String =

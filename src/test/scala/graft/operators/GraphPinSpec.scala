@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r19 optimization internals:
-  *  - pinByKey must still deliver a HashPartitioning + in-partition
-  *    ordering on the checkpointed frame now that the AQE-off bracket is
-  *    THREAD-scoped (cloned SQLConf) instead of session-global;
+  *  - pinByKey must deliver a HashPartitioning + in-partition ordering on
+  *    the pinned frame, which PinnedLayout declares on a `LogicalRDD`
+  *    over the repartitioned, sorted rows instead of inferring it from the
+  *    executed plan (AQE infers `UnknownPartitioning`);
   *  - the session's own adaptive.enabled must be untouched by a pin;
   *  - the partition count must derive from the caller-known row count
   *    (capped at the session conf);

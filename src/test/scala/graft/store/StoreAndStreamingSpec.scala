@@ -110,6 +110,29 @@ class StoreAndStreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("folder driver --precision single: CAR_ln_/CAR_of_ tables are single-precision CAR") {
+    import graft.operators.{DspOperators, CommonReferencing}
+    val root = Files.createTempDirectory("folder32").toString
+    StreamingOps.deleteOnExit(java.nio.file.Paths.get(root))
+    val raw = Synthetic.segments(spark, 1.0, 6, 2000.0, seed = 21)
+    val store = new NwbStore(s"$root/sess0", spark)
+    store.writeAcquisition("ECoG", raw)
+    PreprocessFolder.preprocessStore(store, PreprocessFolder.parse(Array(root,
+      "--initial-rate", "1000", "--all-steps", "--precision", "single")))
+
+    val notched = DspOperators.applyLinenoiseNotch(
+      DspOperators.resample(store.readAcquisition("ECoG"), 1000.0, precision = "single"),
+      precision = "single")
+    def traces(df: org.apache.spark.sql.DataFrame) =
+      df.select(coalesce(col("channel"), lit(-1)), col("values").cast("array<float>")).collect()
+        .map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
+    val referenced = traces(CommonReferencing.subtractCarSegments(notched, 6, precision = "single"))
+    val car = traces(CommonReferencing.carSegments(notched, 6, precision = "single"))
+    assert(referenced.size == 6 && car.size == 1)
+    assert(traces(store.readProcessing("CAR_ln_downsampled_ECoG")) == referenced)
+    assert(traces(store.readProcessing("CAR_of_downsampled_ECoG")) == car)
+  }
+
   test("storeSubtractCar: CAR_<s> + literal CAR tables; CAR trace reconstructs the subtraction") {
     import graft.operators.{Store, CommonReferencing}
     val root = Files.createTempDirectory("subcar").toString
